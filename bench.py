@@ -220,21 +220,6 @@ def _bench_session(sf_dir: str, cpus: int) -> dict[str, float]:
         lambda: flagship.pipeline_aggregates_from(spark, seq).collect(),
         noise_key="pipeline_e2e",
     )
-    # single-scan CASE-dispatched variant (the shape for NOT-source-
-    # partitioned input: 1 scan + 1 decode stage instead of 3 branches)
-    queries["pipeline_e2e_fused"] = _timeit(
-        lambda: flagship.pipeline_aggregates_from(spark, seq, fused=True).collect(),
-        warm=0,
-        runs=1,
-        noise_key="pipeline_e2e_fused",
-    )
-    # JVM-expression decode variant (oracle-parity path)
-    queries["pipeline_e2e_jvm"] = _timeit(
-        lambda: flagship.pipeline_aggregates_from(spark, seq, arrow=False).collect(),
-        warm=0,
-        runs=1,
-        noise_key="pipeline_e2e_jvm",
-    )
     # full routed fan-out materialization (write-side cost, incl. the
     # explicit pre-write repartition)
     queries["routed_materialize"] = _timeit(
@@ -334,7 +319,8 @@ def run_bench() -> dict:
             try:
                 result["scaling"] = _scaling_bench(sf_dir, cpus, n_rows)
             except Exception as exc:  # noqa: BLE001
-                result["scaling"] = {"error": f"{type(exc).__name__}: {exc}"}
+                # py4j errors carry multi-KB Java traces; keep the head only
+                result["scaling"] = {"error": f"{type(exc).__name__}: {exc}"[:300]}
             if "seq_per_sec_high" in result["scaling"]:
                 # the sf0.1 headline is Spark-startup-bound (~2s fixed on 100k
                 # rows); the CPU-bound rate is the scaling block's widest run
@@ -485,283 +471,287 @@ def _scaling_bench(sf_dir: str, cpus: int, n_rows: int) -> dict:
     # probe's dirty pages are charged to whoever allocates next).
     pool_low = mp.Pool(low_cpus)
     pool_mid = mp.Pool(mid_cpus)
-    pool_low.map(_mem_burn, [0] * low_cpus)  # fault in each worker's buffer
-    pool_mid.map(_mem_burn, [0] * mid_cpus)
-
-    def cpu_probe() -> float:
-        """Wall-clock speedup ceiling of low->mid pure-CPU parallelism on
-        the box right now (1.0 = ideal 4x; <1 under external load)."""
-        out = {}
-        for procs, pool in ((low_cpus, pool_low), (mid_cpus, pool_mid)):
-            t0 = time.perf_counter()
-            pool.map(_burn, [5_000_000] * (mid_cpus * 2))
-            out[procs] = time.perf_counter() - t0
-        return (out[low_cpus] / out[mid_cpus]) / (mid_cpus / low_cpus)
-
-    def mem_probe() -> float:
-        """low->mid scaling ceiling for a memory-BANDWIDTH-bound kernel --
-        the binding constraint for this decode/parse-shaped job."""
-        out = {}
-        for procs, pool in ((low_cpus, pool_low), (mid_cpus, pool_mid)):
-            t0 = time.perf_counter()
-            pool.map(_mem_burn, [1] * mid_cpus)
-            out[procs] = time.perf_counter() - t0
-        return (out[low_cpus] / out[mid_cpus]) / (mid_cpus / low_cpus)
-
-    prep = gs("bench-scale-prep", master=f"local[{cpus}]", shuffle_partitions=cpus)
-    prep.sparkContext.setLogLevel("ERROR")
-    big_cache = ensure_sequences_cache(prep, sf_dir, factor)
-    cache_bytes = sum(
-        os.path.getsize(os.path.join(dp, f))
-        for dp, _, fs in os.walk(big_cache)
-        for f in fs
-    )
-    prep.stop()
-    big_rows = n_rows * factor
-    # scan parallelism must not cap the widest run: size split bytes so the
-    # scan yields >=4 tasks per core at the top level (at 24 scan partitions
-    # a local[32] run can use only 24 cores -- a structural 0.75 efficiency
-    # cap, which is exactly what round-1's scaling numbers hit)
-    split_bytes = max(1 << 20, cache_bytes // (cpus * 4))
-    # Measurement workers get a SMALL fixed heap (6g, not the session
-    # default 16g): the timed job streams a cached scan and never needs
-    # multi-GB heaps, while 3 workers x 16g faulted-in Xms heaps (a) made
-    # every full collection sweep 16 GB and (b) put the box under enough
-    # page pressure that an idle worker's heap got reclaimed between runs —
-    # both showed up as 2-2.3x CPU-seconds on a level's FIRST timed run
-    # even after the double-warm fix.
-    heap = os.environ.get("SPARK_GRAFT_SCALE_HEAP", "6g")
-    scan_conf = {
-        "spark.sql.files.maxPartitionBytes": str(split_bytes),
-        "spark.sql.files.openCostInBytes": "131072",
-        "spark.driver.memory": heap,
-        # ParallelGC + fixed heap for the MEASUREMENT workers only: default
-        # G1 on a growable heap injected concurrent-GC bursts into ~1 in
-        # 3 timed runs (1.5-2.6x CPU-seconds with zero external load — the
-        # outlier the clean-pass guard exists for); with ParallelGC+Xms the
-        # per-level CPU spread dropped to <15%.
-        "spark.driver.extraJavaOptions": f"-XX:+UseParallelGC -Xms{heap}",
-    }
-
-    # One persistent worker per level, each launched under `taskset -c` so
-    # the WHOLE tree (JVM, pyspark daemon + workers, GC threads) inherits
-    # the mask -- in unconfined local mode a local[8] run is not an 8-core
-    # run (~11 effective cores measured). All stay alive for the whole bench
-    # and ALTERNATE runs, so each pass's runs execute seconds apart under
-    # the same external load; round-2's block structure (all lows, then all
-    # highs, minutes apart) let one co-tenant burst corrupt the ratio.
-    full_affinity = sorted(os.sched_getaffinity(0))
-    repo_root = os.path.dirname(os.path.abspath(__file__))
-
-    def _start_worker(n: int):
-        mask = ",".join(str(c) for c in full_affinity[:n])
-        errf = open(os.path.join(CACHE_ROOT, f"scale_worker_{n}.err"), "w")
-        return subprocess.Popen(
-            [
-                "taskset",
-                "-c",
-                mask,
-                sys.executable,
-                os.path.join(repo_root, "tools", "scale_worker.py"),
-                "--cpus",
-                str(n),
-                "--cache",
-                big_cache,
-                "--conf",
-                json.dumps(scan_conf),
-            ],
-            stdin=subprocess.PIPE,
-            stdout=subprocess.PIPE,
-            stderr=errf,
-            text=True,
-            bufsize=1,
-            cwd=repo_root,
-        )
-
-    def _wait_ready(p) -> None:
-        for line in p.stdout:
-            if line.strip() == "READY":
-                return
-        raise RuntimeError(
-            f"scale worker died during startup (see {CACHE_ROOT}/scale_worker_*.err)"
-        )
-
-    def _run(p) -> dict:
-        p.stdin.write("run\n")
-        p.stdin.flush()
-        line = p.stdout.readline()
-        if not line:
-            raise RuntimeError("scale worker died mid-run")
-        return json.loads(line)
-
-    def _wait_quiet(budget: float, thresh: float = 3.0) -> float:
-        """Hold the next pass until external load drops below `thresh` busy
-        cores, up to `budget` seconds. Returns seconds actually waited."""
-        t0 = time.perf_counter()
-        while True:
-            waited = time.perf_counter() - t0
-            if _ext_busy_cores() < thresh or waited >= budget:
-                return round(time.perf_counter() - t0, 1)
-            time.sleep(1.0)
-
-    mem_pre = mem_probe()
-    p0 = cpu_probe()
-    levels = [low_cpus, mid_cpus] + ([top_cpus] if top_cpus else [])
-    workers = {n: _start_worker(n) for n in levels}
-
-    def _restart_worker(n: int) -> None:
-        """Replace a persistently degraded worker JVM with a fresh one.
-
-        Observed failure mode (driver-sim, 2026-08-19): the 32-wide worker
-        settles at ~2x CPU-seconds (365 vs ~190) with ZERO external load and
-        never recovers across in-place re-runs — JVM state (GC ergonomics /
-        JIT profile) poisoned during the contended concurrent warm, while a
-        freshly booted worker at the same width reaches steady state. Boot +
-        warms cost ~60-90 s at 32-wide; callers gate on budget."""
-        w = workers[n]
-        try:
-            w.stdin.write("quit\n")
-            w.stdin.flush()
-            w.wait(timeout=30)
-        except Exception:
-            w.kill()
-        workers[n] = _start_worker(n)
-        _wait_ready(workers[n])
-
-    restarted: set[int] = set()
     try:
-        for w in workers.values():  # all warm concurrently (untimed)
-            _wait_ready(w)
-        runs = []
-        budget_left = quiet_budget
-        # scaling now runs FIRST: reserve wall-clock for the query suite +
-        # parse bench that follow (≈250 s at sf0.1/local[32])
-        reserve = float(os.environ.get("SPARK_GRAFT_SCALE_RESERVE_S", "250"))
-        for _ in range(passes):
-            if runs and _budget_left() < reserve + 60:
-                break  # keep completed passes over starving the query suite
-            waited = _wait_quiet(min(budget_left, max(0.0, _budget_left() - reserve - 30)))
-            budget_left = max(0.0, budget_left - waited)
-            r = {n: _run(workers[n]) for n in levels}
-            # Per-level sanity gate (VERDICT r3 item 1): for this plan shape a
-            # wider level can never be slower than the next-narrower one, and
-            # CPU-seconds are near-flat across levels (healthy spread <1.6x;
-            # r3 recorded a corrupted 32c level at 33.3s wall / 911 CPU-s vs
-            # 15.4s/220 at 16c and published it as the at-scale headline).
-            # Re-warm (the worker's post-run System.gc already ran) and re-run
-            # the offending level once, recording BOTH attempts; keep the
-            # faster one.
-            retries: dict[int, list[dict]] = {}
-            for i, n in enumerate(levels):
-                # gate multiplier is env-tunable so the restart path can be
-                # forced (gate < 1 fails every wider level) in a harness test
-                cpu_gate = float(os.environ.get("SPARK_GRAFT_SCALE_CPU_GATE", "2.2"))
-                for attempt in range(3):  # 2 in-place re-runs, then 1 JVM restart
-                    cpu_floor = min(r[m]["cpu"] for m in levels)
-                    bad_wall = i > 0 and r[n]["wall"] > r[levels[i - 1]]["wall"]
-                    bad_cpu = cpu_floor > 0 and r[n]["cpu"] > cpu_gate * cpu_floor
-                    if not (bad_wall or bad_cpu):
+        pool_low.map(_mem_burn, [0] * low_cpus)  # fault in each worker's buffer
+        pool_mid.map(_mem_burn, [0] * mid_cpus)
+
+        def cpu_probe() -> float:
+            """Wall-clock speedup ceiling of low->mid pure-CPU parallelism on
+            the box right now (1.0 = ideal 4x; <1 under external load)."""
+            out = {}
+            for procs, pool in ((low_cpus, pool_low), (mid_cpus, pool_mid)):
+                t0 = time.perf_counter()
+                pool.map(_burn, [5_000_000] * (mid_cpus * 2))
+                out[procs] = time.perf_counter() - t0
+            return (out[low_cpus] / out[mid_cpus]) / (mid_cpus / low_cpus)
+
+        def mem_probe() -> float:
+            """low->mid scaling ceiling for a memory-BANDWIDTH-bound kernel --
+            the binding constraint for this decode/parse-shaped job."""
+            out = {}
+            for procs, pool in ((low_cpus, pool_low), (mid_cpus, pool_mid)):
+                t0 = time.perf_counter()
+                pool.map(_mem_burn, [1] * mid_cpus)
+                out[procs] = time.perf_counter() - t0
+            return (out[low_cpus] / out[mid_cpus]) / (mid_cpus / low_cpus)
+
+        prep = gs("bench-scale-prep", master=f"local[{cpus}]", shuffle_partitions=cpus)
+        prep.sparkContext.setLogLevel("ERROR")
+        big_cache = ensure_sequences_cache(prep, sf_dir, factor)
+        cache_bytes = sum(
+            os.path.getsize(os.path.join(dp, f))
+            for dp, _, fs in os.walk(big_cache)
+            for f in fs
+        )
+        prep.stop()
+        big_rows = n_rows * factor
+        # scan parallelism must not cap the widest run: size split bytes so the
+        # scan yields >=4 tasks per core at the top level (at 24 scan partitions
+        # a local[32] run can use only 24 cores -- a structural 0.75 efficiency
+        # cap, which is exactly what round-1's scaling numbers hit)
+        split_bytes = max(1 << 20, cache_bytes // (cpus * 4))
+        # Measurement workers get a SMALL fixed heap (6g, not the session
+        # default 16g): the timed job streams a cached scan and never needs
+        # multi-GB heaps, while 3 workers x 16g faulted-in Xms heaps (a) made
+        # every full collection sweep 16 GB and (b) put the box under enough
+        # page pressure that an idle worker's heap got reclaimed between runs —
+        # both showed up as 2-2.3x CPU-seconds on a level's FIRST timed run
+        # even after the double-warm fix.
+        heap = os.environ.get("SPARK_GRAFT_SCALE_HEAP", "6g")
+        scan_conf = {
+            "spark.sql.files.maxPartitionBytes": str(split_bytes),
+            "spark.sql.files.openCostInBytes": "131072",
+            "spark.driver.memory": heap,
+            # ParallelGC + fixed heap for the MEASUREMENT workers only: default
+            # G1 on a growable heap injected concurrent-GC bursts into ~1 in
+            # 3 timed runs (1.5-2.6x CPU-seconds with zero external load — the
+            # outlier the clean-pass guard exists for); with ParallelGC+Xms the
+            # per-level CPU spread dropped to <15%.
+            "spark.driver.extraJavaOptions": f"-XX:+UseParallelGC -Xms{heap}",
+        }
+
+        # One persistent worker per level, each launched under `taskset -c` so
+        # the WHOLE tree (JVM, pyspark daemon + workers, GC threads) inherits
+        # the mask -- in unconfined local mode a local[8] run is not an 8-core
+        # run (~11 effective cores measured). All stay alive for the whole bench
+        # and ALTERNATE runs, so each pass's runs execute seconds apart under
+        # the same external load; round-2's block structure (all lows, then all
+        # highs, minutes apart) let one co-tenant burst corrupt the ratio.
+        full_affinity = sorted(os.sched_getaffinity(0))
+        repo_root = os.path.dirname(os.path.abspath(__file__))
+
+        def _start_worker(n: int):
+            mask = ",".join(str(c) for c in full_affinity[:n])
+            errf = open(os.path.join(CACHE_ROOT, f"scale_worker_{n}.err"), "w")
+            return subprocess.Popen(
+                [
+                    "taskset",
+                    "-c",
+                    mask,
+                    sys.executable,
+                    os.path.join(repo_root, "tools", "scale_worker.py"),
+                    "--cpus",
+                    str(n),
+                    "--cache",
+                    big_cache,
+                    "--conf",
+                    json.dumps(scan_conf),
+                ],
+                stdin=subprocess.PIPE,
+                stdout=subprocess.PIPE,
+                stderr=errf,
+                text=True,
+                bufsize=1,
+                cwd=repo_root,
+            )
+
+        def _wait_ready(p) -> None:
+            for line in p.stdout:
+                if line.strip() == "READY":
+                    return
+            raise RuntimeError(
+                f"scale worker died during startup (see {CACHE_ROOT}/scale_worker_*.err)"
+            )
+
+        def _run(p) -> dict:
+            p.stdin.write("run\n")
+            p.stdin.flush()
+            line = p.stdout.readline()
+            if not line:
+                raise RuntimeError("scale worker died mid-run")
+            return json.loads(line)
+
+        def _wait_quiet(budget: float, thresh: float = 3.0) -> float:
+            """Hold the next pass until external load drops below `thresh` busy
+            cores, up to `budget` seconds. Returns seconds actually waited."""
+            t0 = time.perf_counter()
+            while True:
+                waited = time.perf_counter() - t0
+                if _ext_busy_cores() < thresh or waited >= budget:
+                    return round(time.perf_counter() - t0, 1)
+                time.sleep(1.0)
+
+        mem_pre = mem_probe()
+        p0 = cpu_probe()
+        levels = [low_cpus, mid_cpus] + ([top_cpus] if top_cpus else [])
+        workers = {n: _start_worker(n) for n in levels}
+
+        def _restart_worker(n: int) -> None:
+            """Replace a persistently degraded worker JVM with a fresh one.
+
+            Observed failure mode (full bench run, 2026-08-19): the 32-wide worker
+            settles at ~2x CPU-seconds (365 vs ~190) with ZERO external load and
+            never recovers across in-place re-runs — JVM state (GC ergonomics /
+            JIT profile) poisoned during the contended concurrent warm, while a
+            freshly booted worker at the same width reaches steady state. Boot +
+            warms cost ~60-90 s at 32-wide; callers gate on budget."""
+            w = workers[n]
+            try:
+                w.stdin.write("quit\n")
+                w.stdin.flush()
+                w.wait(timeout=30)
+            except Exception:
+                w.kill()
+            workers[n] = _start_worker(n)
+            _wait_ready(workers[n])
+
+        restarted: set[int] = set()
+        try:
+            for w in workers.values():  # all warm concurrently (untimed)
+                _wait_ready(w)
+            runs = []
+            budget_left = quiet_budget
+            # scaling now runs FIRST: reserve wall-clock for the query suite +
+            # parse bench that follow (≈250 s at sf0.1/local[32])
+            reserve = float(os.environ.get("SPARK_GRAFT_SCALE_RESERVE_S", "250"))
+            for _ in range(passes):
+                if runs and _budget_left() < reserve + 60:
+                    break  # keep completed passes over starving the query suite
+                waited = _wait_quiet(min(budget_left, max(0.0, _budget_left() - reserve - 30)))
+                budget_left = max(0.0, budget_left - waited)
+                r = {n: _run(workers[n]) for n in levels}
+                # Per-level sanity gate (VERDICT r3 item 1): for this plan shape a
+                # wider level can never be slower than the next-narrower one, and
+                # CPU-seconds are near-flat across levels (healthy spread <1.6x;
+                # r3 recorded a corrupted 32c level at 33.3s wall / 911 CPU-s vs
+                # 15.4s/220 at 16c and published it as the at-scale headline).
+                # Re-warm (the worker's post-run System.gc already ran) and re-run
+                # the offending level once, recording BOTH attempts; keep the
+                # faster one.
+                retries: dict[int, list[dict]] = {}
+                for i, n in enumerate(levels):
+                    # gate multiplier is env-tunable so the restart path can be
+                    # forced (gate < 1 fails every wider level) in a harness test
+                    cpu_gate = float(os.environ.get("SPARK_GRAFT_SCALE_CPU_GATE", "2.2"))
+                    for attempt in range(3):  # 2 in-place re-runs, then 1 JVM restart
+                        cpu_floor = min(r[m]["cpu"] for m in levels)
+                        bad_wall = i > 0 and r[n]["wall"] > r[levels[i - 1]]["wall"]
+                        bad_cpu = cpu_floor > 0 and r[n]["cpu"] > cpu_gate * cpu_floor
+                        if not (bad_wall or bad_cpu):
+                            break
+                        if attempt < 2:
+                            if _budget_left() < reserve + r[n]["wall"]:
+                                break
+                            retries.setdefault(n, []).append(r[n])
+                            r2 = _run(workers[n])
+                        else:
+                            # In-place re-runs did not recover AND the window was
+                            # quiet (ext+steal < 1 core): the worker JVM itself is
+                            # degraded (see _restart_worker). One fresh-JVM shot
+                            # per level per bench, budget permitting. The gate uses
+                            # a SMALLER reserve than the pass gate: the query suite
+                            # runs unconditionally in ~130 s — the full 250 s
+                            # reserve only protects its retry capacity, and an
+                            # at-scale headline off a poisoned JVM costs more than
+                            # a few skipped query retries (the degraded full-bench
+                            # run had ~270 s left at this decision point).
+                            restart_reserve = float(
+                                os.environ.get("SPARK_GRAFT_RESTART_RESERVE_S", "150")
+                            )
+                            quiet_window = (
+                                (r[n]["ext_cpu"] + r[n]["steal_cpu"]) / r[n]["wall"] < 1.0
+                            )
+                            if (
+                                n in restarted
+                                or not quiet_window
+                                or _budget_left() < restart_reserve + 90 + r[n]["wall"]
+                            ):
+                                break
+                            restarted.add(n)
+                            retries.setdefault(n, []).append({**r[n], "restarted_jvm": True})
+                            _restart_worker(n)
+                            r2 = _run(workers[n])
+                        if r2["wall"] < r[n]["wall"]:
+                            r[n] = r2
+                # Narrow-level sanity gate (VERDICT r4 item 1c): efficiency > 1.05
+                # is non-physical for this plan shape and means the LOW level was
+                # the slow one (noise inflating the numerator sails through the
+                # wide-level gates — r4 published 1.195). Re-run the low level,
+                # keep the faster attempt, recompute.
+                def _eff() -> float:
+                    return (
+                        r[mid_cpus]["wall"] and r[low_cpus]["wall"] / r[mid_cpus]["wall"]
+                    ) / (mid_cpus / low_cpus)
+
+                retries_low: list[dict] = []
+                for _ in range(2):
+                    if _eff() <= 1.05 or _budget_left() < reserve + r[low_cpus]["wall"]:
                         break
-                    if attempt < 2:
-                        if _budget_left() < reserve + r[n]["wall"]:
-                            break
-                        retries.setdefault(n, []).append(r[n])
-                        r2 = _run(workers[n])
-                    else:
-                        # In-place re-runs did not recover AND the window was
-                        # quiet (ext+steal < 1 core): the worker JVM itself is
-                        # degraded (see _restart_worker). One fresh-JVM shot
-                        # per level per bench, budget permitting. The gate uses
-                        # a SMALLER reserve than the pass gate: the query suite
-                        # runs unconditionally in ~130 s — the full 250 s
-                        # reserve only protects its retry capacity, and an
-                        # at-scale headline off a poisoned JVM costs more than
-                        # a few skipped query retries (the degraded driver-sim
-                        # run had ~270 s left at this decision point).
-                        restart_reserve = float(
-                            os.environ.get("SPARK_GRAFT_RESTART_RESERVE_S", "150")
-                        )
-                        quiet_window = (
-                            (r[n]["ext_cpu"] + r[n]["steal_cpu"]) / r[n]["wall"] < 1.0
-                        )
-                        if (
-                            n in restarted
-                            or not quiet_window
-                            or _budget_left() < restart_reserve + 90 + r[n]["wall"]
-                        ):
-                            break
-                        restarted.add(n)
-                        retries.setdefault(n, []).append({**r[n], "restarted_jvm": True})
-                        _restart_worker(n)
-                        r2 = _run(workers[n])
-                    if r2["wall"] < r[n]["wall"]:
-                        r[n] = r2
-            # Narrow-level sanity gate (VERDICT r4 item 1c): efficiency > 1.05
-            # is non-physical for this plan shape and means the LOW level was
-            # the slow one (noise inflating the numerator sails through the
-            # wide-level gates — r4 published 1.195). Re-run the low level,
-            # keep the faster attempt, recompute.
-            def _eff() -> float:
-                return (
-                    r[mid_cpus]["wall"] and r[low_cpus]["wall"] / r[mid_cpus]["wall"]
-                ) / (mid_cpus / low_cpus)
+                    retries_low.append(r[low_cpus])
+                    r2 = _run(workers[low_cpus])
+                    if r2["wall"] < r[low_cpus]["wall"]:
+                        r[low_cpus] = r2
+                if retries_low:
+                    retries.setdefault(low_cpus, []).extend(retries_low)
+                eff = _eff()
+                row = {"quiet_wait_s": waited, "efficiency": round(eff, 3)}
+                for n, attempts in retries.items():
+                    row[f"retry_{n}c"] = [
+                        {
+                            "wall": a["wall"],
+                            "cpu": a["cpu"],
+                            "ext_cores": round(a["ext_cpu"] / a["wall"], 1),
+                            "steal_cores": round(a["steal_cpu"] / a["wall"], 1),
+                            **(
+                                {"restarted_jvm": True}
+                                if a.get("restarted_jvm")
+                                else {}
+                            ),
+                        }
+                        for a in attempts
+                    ]
+                for n in levels:
+                    row[f"sec_{n}c"] = r[n]["wall"]
+                    row[f"cpu_s_{n}c"] = r[n]["cpu"]
+                    # co-tenant busy cores DURING the timed window -- evidence
+                    # the pass ran quiet -- plus hypervisor steal cores: external
+                    # load on the PHYSICAL host, invisible to guest loadavg
+                    # (measured: up to ~3 cores stolen at 32-wide on this box)
+                    row[f"ext_cores_{n}c"] = round(r[n]["ext_cpu"] / r[n]["wall"], 1)
+                    row[f"steal_cores_{n}c"] = round(r[n]["steal_cpu"] / r[n]["wall"], 1)
+                if top_cpus:
+                    row["efficiency_mid_to_top"] = round(
+                        (r[mid_cpus]["wall"] / r[top_cpus]["wall"]) / (top_cpus / mid_cpus), 3
+                    )
+                runs.append(row)
+            for w in workers.values():
+                w.stdin.write("quit\n")
+                w.stdin.flush()
+        finally:
+            for w in workers.values():
+                if w.poll() is None:
+                    try:
+                        w.wait(timeout=30)
+                    except subprocess.TimeoutExpired:
+                        w.kill()
 
-            retries_low: list[dict] = []
-            for _ in range(2):
-                if _eff() <= 1.05 or _budget_left() < reserve + r[low_cpus]["wall"]:
-                    break
-                retries_low.append(r[low_cpus])
-                r2 = _run(workers[low_cpus])
-                if r2["wall"] < r[low_cpus]["wall"]:
-                    r[low_cpus] = r2
-            if retries_low:
-                retries.setdefault(low_cpus, []).extend(retries_low)
-            eff = _eff()
-            row = {"quiet_wait_s": waited, "efficiency": round(eff, 3)}
-            for n, attempts in retries.items():
-                row[f"retry_{n}c"] = [
-                    {
-                        "wall": a["wall"],
-                        "cpu": a["cpu"],
-                        "ext_cores": round(a["ext_cpu"] / a["wall"], 1),
-                        "steal_cores": round(a["steal_cpu"] / a["wall"], 1),
-                        **(
-                            {"restarted_jvm": True}
-                            if a.get("restarted_jvm")
-                            else {}
-                        ),
-                    }
-                    for a in attempts
-                ]
-            for n in levels:
-                row[f"sec_{n}c"] = r[n]["wall"]
-                row[f"cpu_s_{n}c"] = r[n]["cpu"]
-                # co-tenant busy cores DURING the timed window -- evidence
-                # the pass ran quiet -- plus hypervisor steal cores: external
-                # load on the PHYSICAL host, invisible to guest loadavg
-                # (measured: up to ~3 cores stolen at 32-wide on this box)
-                row[f"ext_cores_{n}c"] = round(r[n]["ext_cpu"] / r[n]["wall"], 1)
-                row[f"steal_cores_{n}c"] = round(r[n]["steal_cpu"] / r[n]["wall"], 1)
-            if top_cpus:
-                row["efficiency_mid_to_top"] = round(
-                    (r[mid_cpus]["wall"] / r[top_cpus]["wall"]) / (top_cpus / mid_cpus), 3
-                )
-            runs.append(row)
-        for w in workers.values():
-            w.stdin.write("quit\n")
-            w.stdin.flush()
+        p1 = cpu_probe()
+        mem_post = mem_probe()
     finally:
-        for w in workers.values():
-            if w.poll() is None:
-                try:
-                    w.wait(timeout=30)
-                except subprocess.TimeoutExpired:
-                    w.kill()
-
-    p1 = cpu_probe()
-    mem_post = mem_probe()
-    pool_low.terminate()
-    pool_mid.terminate()
+        # an exception in the scaling loop must not leak the probe
+        # workers (each holds a faulted 256 MB buffer)
+        pool_low.terminate()
+        pool_mid.terminate()
     ceiling = (p0 + p1) / 2
     mem_ceiling = (mem_pre + mem_post) / 2
     for r in runs:
@@ -921,6 +911,21 @@ def _compact(full: dict) -> dict:
     return out
 
 
+def _final_line(full: dict) -> str:
+    """The compact summary as one JSON line of at most 2048 chars, for
+    readers that parse only the last line: the largest non-contract key is
+    dropped until the line fits."""
+    compact = _compact(full)
+    line = json.dumps(compact)
+    while len(line) > 2048:
+        extra = [k for k in compact if k not in ("metric", "value", "unit")]
+        if not extra:
+            break
+        compact.pop(max(extra, key=lambda k: len(json.dumps(compact[k]))))
+        line = json.dumps(compact)
+    return line
+
+
 class _TreeCpuSampler:
     """Positive-delta integrator over _tree_cpu_s, sampled every `period` s
     on a daemon thread. A one-shot end-minus-start tree delta UNDERCOUNTS
@@ -978,9 +983,4 @@ if __name__ == "__main__":
     with open(os.path.join(repo, "bench_full.json"), "w") as fh:
         json.dump(full, fh)
     print(json.dumps(full))
-    compact = _compact(full)
-    line = json.dumps(compact)
-    if len(line) > 2048:  # hard guarantee for the driver's tail capture
-        compact.pop("queries", None)
-        line = json.dumps(compact)
-    print(line)
+    print(_final_line(full))

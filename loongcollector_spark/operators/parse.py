@@ -60,10 +60,13 @@ class RegexParser(Operator):
 
     def apply(self, df: DataFrame) -> DataFrame:
         src = _src(self.options)
+        return self.options.finalize(df, *self.extract(src), src)
+
+    def extract(self, src: Column) -> tuple[Column, Column]:
+        """(success, parsed map) over the source value ``src``."""
         if self.regex == "(.*)" and len(self.keys) == 1:
             # whole-line fast path: constant-fold to a rename
-            new_map = parsed_map({self.keys[0]: src})
-            return self.options.finalize(df, src.isNotNull(), new_map, src)
+            return src.isNotNull(), parsed_map({self.keys[0]: src})
         rx = f"^(?:{self.regex})$" if self.full_match else self.regex
         success = src.isNotNull() & src.rlike(rx)
         # the single-matcher-pass trick rewrites the WHOLE string through the
@@ -85,7 +88,7 @@ class RegexParser(Operator):
             new_map = parsed_map(
                 {k: F.regexp_extract(src, rx, i + 1) for i, k in enumerate(self.keys)}
             )
-        return self.options.finalize(df, success, new_map, src)
+        return success, new_map
 
 
 class OverflowTreatment:
@@ -111,6 +114,10 @@ class DelimiterParser(Operator):
 
     def apply(self, df: DataFrame) -> DataFrame:
         src = _src(self.options)
+        return self.options.finalize(df, *self.extract(src), src)
+
+    def extract(self, src: Column) -> tuple[Column, Column]:
+        """(success, parsed map) over the source value ``src``."""
         n = len(self.keys)
         quote_path = bool(self.quote) and len(self.separator) == 1
         if quote_path:
@@ -180,7 +187,7 @@ class DelimiterParser(Operator):
                 new_map = F.map_concat(new_map, ext)
             return new_map
 
-        return self.options.finalize(df, success, flet(arr, build_map), src)
+        return success, flet(arr, build_map)
 
 
 def _split_quoted_strict(line: str, sep: str, quote: str):
@@ -308,6 +315,10 @@ class JsonParser(Operator):
 
     def apply(self, df: DataFrame) -> DataFrame:
         src = _src(self.options)
+        return self.options.finalize(df, *self.extract(src), src)
+
+    def extract(self, src: Column) -> tuple[Column, Column]:
+        """(success, parsed map) over the source value ``src``."""
         m = F.from_json(src, "map<string,string>")
         # non-object JSON (arrays/scalars) and malformed input both yield NULL
         success = src.isNotNull() & m.isNotNull()
@@ -318,7 +329,7 @@ class JsonParser(Operator):
                 F.coalesce(mm, F.expr("map()")), lambda k, v: F.coalesce(v, F.lit(""))
             ),
         )
-        return self.options.finalize(df, success, new_map, src)
+        return success, new_map
 
 
 @dataclass

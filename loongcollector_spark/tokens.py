@@ -9,7 +9,7 @@ Two decode paths:
 - **JVM path** (default, Catalyst/codegen, no Python): ``transform + char +
   concat_ws``. Used in oracle-checked queries so DuckDB can reproduce it.
 - **Arrow path**: numpy-vectorized decode inside ``mapInPandas`` — the
-  performance path for the fused decode+parse stage (north_star: "vectorized
+  flagship's one decode stage, ahead of its parse (north_star: "vectorized
   pandas/Arrow UDF stage ... no per-row Python").
 """
 

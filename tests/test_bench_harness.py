@@ -4,6 +4,8 @@ the compact final-line builder — the driver-artifact defensibility machinery
 
 import time
 
+import pytest
+
 import bench
 
 
@@ -136,3 +138,50 @@ def test_tree_cpu_sampler_keeps_vanished_subtree(monkeypatch):
     for _ in range(4):
         s._sample()
     assert s.total() == 10.0 + 50.0 + 0.0 + 0.0 + 5.0 + 0.0
+
+
+def test_final_line_fits_2kb_with_huge_scaling_error():
+    """A multi-KB scaling error (py4j trace) must not push the final stdout
+    line past 2 KB: the fallback keeps dropping keys until it fits."""
+    full = {
+        "metric": "pipeline_e2e_sec", "value": 2.5, "unit": "sec",
+        "queries": {f"q{i}": 1.0 for i in range(8)},
+        "scaling": {"error": "Py4JJavaError: " + "x" * 10_000},
+    }
+    line = bench._final_line(full)
+    assert len(line) <= 2048
+    import json
+
+    d = json.loads(line)
+    assert (d["metric"], d["value"], d["unit"]) == ("pipeline_e2e_sec", 2.5, "sec")
+    assert d["queries"] == full["queries"]  # only the oversized key went
+
+
+def test_scaling_bench_terminates_probe_pools_on_error(monkeypatch):
+    """An exception inside the scaling section must still terminate both
+    probe pools (their workers each hold a faulted 256 MB buffer)."""
+    import multiprocessing
+
+    from loongcollector_spark import session
+
+    pools = []
+
+    class FakePool:
+        def __init__(self, n):
+            self.terminated = False
+            pools.append(self)
+
+        def map(self, fn, args):
+            return [0.0] * len(args)
+
+        def terminate(self):
+            self.terminated = True
+
+    def boom(*a, **k):
+        raise RuntimeError("spark failed to start")
+
+    monkeypatch.setattr(multiprocessing, "Pool", FakePool)
+    monkeypatch.setattr(session, "get_spark", boom)
+    with pytest.raises(RuntimeError, match="spark failed"):
+        bench._scaling_bench("unused", cpus=8, n_rows=1)
+    assert len(pools) == 2 and all(p.terminated for p in pools)

@@ -1,29 +1,75 @@
-"""Flagship end-to-end behaviors: per-sink resumable writes, routed-row
-equality across paths, skew salting, Arrow/JVM parity, Arrow desensitize."""
+"""Flagship end-to-end behaviors: the one parse path against a per-source
+parser reference, per-sink resumable writes, skew salting, Arrow desensitize."""
 
 import pyspark.sql.functions as F
 import pytest
 
 from loongcollector_spark import flagship
 from loongcollector_spark.operators.base import FIELDS, to_events
+from loongcollector_spark.operators.parse import DelimiterParser, JsonParser, RegexParser
 from loongcollector_spark.operators.transforms import Desensitize, DesensitizeArrow
 from loongcollector_spark.plans.checkpoint import Manifest, resumable_sink_write
 from loongcollector_spark.synth import sequences_df
+from loongcollector_spark.tokens import decode_tokens
+
+_SEQ_SCHEMA = "doc_id string, tokens array<int>, n_tok int, source string"
 
 
-def test_arrow_and_jvm_paths_identical(spark, sf_dir):
-    a = flagship.routed_rows(spark, sf_dir, arrow=True).collect()
-    b = flagship.routed_rows(spark, sf_dir, arrow=False).collect()
-    assert sorted(map(tuple, a)) == sorted(map(tuple, b))
+def _seq_rows(spark, rows):
+    """Sequences frame from (doc_id, line, source) rows, one token per char."""
+    return spark.createDataFrame(
+        [(d, [ord(c) for c in line], len(line), src) for d, line, src in rows], _SEQ_SCHEMA
+    )
+
+
+def _reference_parse(seq):
+    """The branched reference: each parser's own ``apply`` over the events
+    of its source, unioned. Sources without a parser contribute no rows."""
+    ev = to_events(seq.withColumn("content", decode_tokens("tokens")).drop("tokens"))
+
+    def of(source):
+        return ev.filter(F.col("source") == source)
+
+    return (
+        RegexParser(flagship.NGINX_REGEX, flagship.NGINX_KEYS).apply(of("nginx"))
+        .unionByName(JsonParser().apply(of("app-json")))
+        .unionByName(DelimiterParser("\t", flagship.CSV_KEYS).apply(of("csvlog")))
+    )
+
+
+def _keyed(df):
+    rows = df.select("doc_id", "source", FIELDS).collect()
+    return sorted((r["doc_id"], r["source"], tuple(sorted(r[FIELDS].items()))) for r in rows)
 
 
 def test_fused_equals_branched(spark, sf_dir):
-    seq = sequences_df(spark, sf_dir)
-    a = flagship.parsed_events_from(seq).select("doc_id", "source", FIELDS).collect()
-    b = flagship.fused_parsed_events(seq).select("doc_id", "source", FIELDS).collect()
-    ka = sorted((r["doc_id"], r["source"], tuple(sorted(r[FIELDS].items()))) for r in a)
-    kb = sorted((r["doc_id"], r["source"], tuple(sorted(r[FIELDS].items()))) for r in b)
-    assert ka == kb
+    """The one CASE-dispatched parse equals the branched per-source parser
+    union on the fixture plus a csvlog row with EXTEND overflow columns."""
+    overflow = _seq_rows(spark, [("d1", "u1\t10\tGET\t42\textra1\textra2", "csvlog")])
+    seq = sequences_df(spark, sf_dir).select("doc_id", "tokens", "n_tok", "source")
+    seq = seq.unionByName(overflow)
+    got = _keyed(flagship.parsed_events_from(seq))
+    assert got == _keyed(_reference_parse(seq))
+    d1 = dict(next(r[2] for r in got if r[0] == "d1"))
+    assert d1["__column4__"] == "extra1" and d1["__column5__"] == "extra2"
+
+
+def test_source_without_parser_is_dropped(spark):
+    """A row from a source with no parser (here syslog, with tab-separated
+    content that would parse as csvlog) fails the parse and is discarded."""
+    seq = _seq_rows(
+        spark,
+        [
+            ("n", '1.2.3.4 - - [10/Oct/2000:13:55:36 -0700] "GET /a HTTP/1.1" '
+                  '200 5 "-" "ua" "-"', "nginx"),
+            ("j", '{"k": "v"}', "app-json"),
+            ("c", "u1\t10\tGET\t42", "csvlog"),
+            ("s", "u2\t11\tPUT\t43", "syslog"),
+        ],
+    )
+    got = flagship.parsed_events_from(seq)
+    assert sorted(r["source"] for r in got.collect()) == ["app-json", "csvlog", "nginx"]
+    assert _keyed(got) == _keyed(_reference_parse(seq))
 
 
 def test_flagship_sink_writes_match_routed_rows(spark, sf_dir, tmp_path):
@@ -133,32 +179,20 @@ def test_dict_map_csv_rejects_conflicts(tmp_path):
         read_dict_csv(str(p))
 
 
-def test_fused_csvlog_overflow_matches_branched(spark):
-    """A csvlog line with MORE than len(CSV_KEYS) tab-separated fields gets
-    the same __column{i}__ EXTEND overflow keys on the fused path as on the
-    branched DelimiterParser path."""
-    seq = spark.createDataFrame(
-        [("d1", [ord(c) for c in "u1\t10\tGET\t42\textra1\textra2"], 6, "csvlog")],
-        "doc_id string, tokens array<int>, n_tok int, source string",
-    )
-    a = flagship.parsed_events_from(seq, arrow=False).collect()
-    b = flagship.fused_parsed_events(seq, arrow=False).collect()
-    fa, fb = dict(a[0][FIELDS]), dict(b[0][FIELDS])
-    assert fa == fb
-    assert fa["__column4__"] == "extra1" and fa["__column5__"] == "extra2"
-
-
 def test_fused_full_pipeline_matches_branched(spark, sf_dir):
-    """pipeline_aggregates with fused=True (single-scan CASE-dispatch parse)
-    must produce the exact branched-path aggregates."""
-    a = sorted(
-        flagship.pipeline_aggregates(spark, sf_dir).collect(), key=lambda r: r["sink"]
+    """pipeline_aggregates equals the same enrich → route → aggregate over
+    the branched per-source parser reference, and the seeded per-sink counts."""
+    from loongcollector_spark.aggregate import sink_aggregates
+    from loongcollector_spark.operators.enrich import BroadcastLookup
+    from loongcollector_spark.routing import RouteCondition, Router
+    from loongcollector_spark.synth import ROUTE_RULES, source_lookup_df
+
+    ev = _reference_parse(sequences_df(spark, sf_dir))
+    ev = BroadcastLookup(source_lookup_df(spark), on="source").apply(ev)
+    rules = [RouteCondition(r["sink"], r["match_key"], r["match_value"]) for r in ROUTE_RULES]
+    ref = sink_aggregates(Router(rules).apply(ev)).select(
+        "sink", "events", F.col("tokens_total").cast("long").alias("tokens_total")
     )
-    b = sorted(
-        flagship.pipeline_aggregates(spark, sf_dir, fused=True).collect(),
-        key=lambda r: r["sink"],
-    )
-    assert [tuple(r) for r in a] == [tuple(r) for r in b]
-    assert {r["sink"]: r["events"] for r in a} == {
-        "sink_a": 850, "sink_b": 100, "sink_default": 950,
-    }
+    a = sorted(tuple(r) for r in flagship.pipeline_aggregates(spark, sf_dir).collect())
+    assert a == sorted(tuple(r) for r in ref.collect())
+    assert {r[0]: r[1] for r in a} == {"sink_a": 850, "sink_b": 100, "sink_default": 950}

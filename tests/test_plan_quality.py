@@ -1,7 +1,7 @@
 """Physical-plan quality gates — the 100 TB design invariants asserted on
 the actual Catalyst output, so a regression that silently de-optimizes the
-plan (lost broadcast, surprise cartesian, missing partial agg, unpushed
-source filter) fails CI rather than surfacing as a cluster incident."""
+plan (lost broadcast, surprise cartesian, missing partial agg, a second
+scan of the input) fails CI rather than surfacing as a cluster incident."""
 
 import re
 
@@ -31,25 +31,6 @@ def test_flagship_aggregate_is_partial(spark, sf_dir):
     plan = _plan(flagship.pipeline_aggregates(spark, sf_dir))
     aggs = plan.count("HashAggregate")
     assert aggs >= 2
-
-
-def test_source_filter_below_python_stage(spark, sf_dir):
-    """The per-source filter must sit BELOW MapInPandas (filters don't push
-    through a Python stage on their own) so each branch decodes only its
-    slice."""
-    plan = _plan(flagship.parsed_events(spark, sf_dir))
-    tree = plan.split("\n\n")[0]
-    # in the numbered tree, every MapInPandas node must appear with a Filter
-    # deeper than it (higher indent) within its branch
-    lines = tree.splitlines()
-    for i, line in enumerate(lines):
-        if "MapInPandas" not in line:
-            continue
-        indent = len(line) - len(line.lstrip(" :+-"))
-        below = lines[i + 1 : i + 4]
-        assert any("Filter" in b or "Scan" in b for b in below), (
-            "MapInPandas without a pushed filter/scan beneath:\n" + "\n".join(lines[i : i + 4])
-        )
 
 
 def test_aggregate_path_has_no_prewrite_shuffle(spark, sf_dir):
@@ -239,16 +220,23 @@ def test_decode_repartition_only_on_narrow_scans(spark, sf_dir, tmp_path):
     assert "RoundRobinPartitioning" in plan or "REPARTITION_BY_NUM" in plan
 
 
-def test_fused_pipeline_has_single_scan(spark, sf_dir):
-    """The fused flagship variant is the not-source-partitioned 100 TB shape:
-    exactly ONE parquet scan and ONE Python decode stage for all three
-    formats (the branched variant reads the fixture 3x with disjoint pushed
-    filters)."""
-    plan = _plan(flagship.pipeline_aggregates(spark, sf_dir, fused=True))
-    tree = plan.split("\n\n")[0]
+def _assert_single_path(tree: str) -> None:
     assert tree.count("Scan parquet") == 1, tree
-    assert tree.count("MapInPandas") == 1
+    assert tree.count("MapInPandas") == 1, tree
+    assert "Union" not in tree, tree
+
+
+def test_fused_pipeline_has_single_scan(spark, sf_dir):
+    """The flagship is the not-source-partitioned 100 TB shape: exactly ONE
+    parquet scan and ONE Python decode stage for all three formats, and no
+    per-source Union."""
+    tree = _plan(flagship.pipeline_aggregates(spark, sf_dir)).split("\n\n")[0]
+    _assert_single_path(tree)
     assert "BroadcastHashJoin" in tree and "SortMergeJoin" not in tree
+
+
+def test_routed_write_path_has_single_scan(spark, sf_dir):
+    _assert_single_path(_plan(flagship.routed(spark, sf_dir)).split("\n\n")[0])
 
 
 def test_gopher_repetition_builds_grams_once(spark, sf_dir):
