@@ -44,14 +44,20 @@ def _keyed(df):
 
 def test_fused_equals_branched(spark, sf_dir):
     """The one CASE-dispatched parse equals the branched per-source parser
-    union on the fixture plus a csvlog row with EXTEND overflow columns."""
-    overflow = _seq_rows(spark, [("d1", "u1\t10\tGET\t42\textra1\textra2", "csvlog")])
+    union on the fixture."""
     seq = sequences_df(spark, sf_dir).select("doc_id", "tokens", "n_tok", "source")
-    seq = seq.unionByName(overflow)
+    assert _keyed(flagship.parsed_events_from(seq)) == _keyed(_reference_parse(seq))
+
+
+def test_fused_csvlog_overflow_matches_branched(spark):
+    """A csvlog line with MORE than len(CSV_KEYS) tab-separated fields gets
+    the same __column{i}__ EXTEND overflow keys on the one parse path as from
+    the DelimiterParser reference."""
+    seq = _seq_rows(spark, [("d1", "u1\t10\tGET\t42\textra1\textra2", "csvlog")])
     got = _keyed(flagship.parsed_events_from(seq))
     assert got == _keyed(_reference_parse(seq))
-    d1 = dict(next(r[2] for r in got if r[0] == "d1"))
-    assert d1["__column4__"] == "extra1" and d1["__column5__"] == "extra2"
+    fields = dict(got[0][2])
+    assert fields["__column4__"] == "extra1" and fields["__column5__"] == "extra2"
 
 
 def test_source_without_parser_is_dropped(spark):
