@@ -616,6 +616,7 @@ def _scaling_bench(sf_dir: str, cpus: int, n_rows: int) -> dict:
             _wait_ready(workers[n])
 
         restarted: set[int] = set()
+        dead: set[int] = set()  # levels whose fresh worker failed; no further passes
         try:
             for w in workers.values():  # all warm concurrently (untimed)
                 _wait_ready(w)
@@ -625,7 +626,7 @@ def _scaling_bench(sf_dir: str, cpus: int, n_rows: int) -> dict:
             # parse bench that follow (≈250 s at sf0.1/local[32])
             reserve = float(os.environ.get("SPARK_GRAFT_SCALE_RESERVE_S", "250"))
             for _ in range(passes):
-                if runs and _budget_left() < reserve + 60:
+                if dead or (runs and _budget_left() < reserve + 60):
                     break  # keep completed passes over starving the query suite
                 waited = _wait_quiet(min(budget_left, max(0.0, _budget_left() - reserve - 30)))
                 budget_left = max(0.0, budget_left - waited)
@@ -678,9 +679,17 @@ def _scaling_bench(sf_dir: str, cpus: int, n_rows: int) -> dict:
                             ):
                                 break
                             restarted.add(n)
-                            retries.setdefault(n, []).append({**r[n], "restarted_jvm": True})
-                            _restart_worker(n)
-                            r2 = _run(workers[n])
+                            entry = {**r[n], "restarted_jvm": True}
+                            retries.setdefault(n, []).append(entry)
+                            try:
+                                _restart_worker(n)
+                                r2 = _run(workers[n])
+                            except (OSError, RuntimeError, ValueError) as e:
+                                # keep the degraded result: losing it would
+                                # turn every completed pass into an error
+                                entry["restart_error"] = f"{type(e).__name__}: {e}"[:200]
+                                dead.add(n)
+                                break
                         if r2["wall"] < r[n]["wall"]:
                             r[n] = r2
                 # Narrow-level sanity gate (VERDICT r4 item 1c): efficiency > 1.05
@@ -695,7 +704,11 @@ def _scaling_bench(sf_dir: str, cpus: int, n_rows: int) -> dict:
 
                 retries_low: list[dict] = []
                 for _ in range(2):
-                    if _eff() <= 1.05 or _budget_left() < reserve + r[low_cpus]["wall"]:
+                    if (
+                        _eff() <= 1.05
+                        or low_cpus in dead
+                        or _budget_left() < reserve + r[low_cpus]["wall"]
+                    ):
                         break
                     retries_low.append(r[low_cpus])
                     r2 = _run(workers[low_cpus])
@@ -712,11 +725,11 @@ def _scaling_bench(sf_dir: str, cpus: int, n_rows: int) -> dict:
                             "cpu": a["cpu"],
                             "ext_cores": round(a["ext_cpu"] / a["wall"], 1),
                             "steal_cores": round(a["steal_cpu"] / a["wall"], 1),
-                            **(
-                                {"restarted_jvm": True}
-                                if a.get("restarted_jvm")
-                                else {}
-                            ),
+                            **{
+                                k: a[k]
+                                for k in ("restarted_jvm", "restart_error")
+                                if k in a
+                            },
                         }
                         for a in attempts
                     ]
@@ -735,8 +748,11 @@ def _scaling_bench(sf_dir: str, cpus: int, n_rows: int) -> dict:
                     )
                 runs.append(row)
             for w in workers.values():
-                w.stdin.write("quit\n")
-                w.stdin.flush()
+                try:
+                    w.stdin.write("quit\n")
+                    w.stdin.flush()
+                except OSError:
+                    pass  # a dead level's worker has no stdin reader left
         finally:
             for w in workers.values():
                 if w.poll() is None:

@@ -21,10 +21,12 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import time
 from dataclasses import dataclass
 from typing import Callable, Sequence
 
+import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 
@@ -59,6 +61,38 @@ class Manifest:
                 os.remove(os.path.join(self.path, f))
 
 
+def _pending(units: Sequence[str], manifest: Manifest) -> list[str]:
+    """``units`` without a done-marker, in order and without repeats."""
+    done = manifest.done_units()
+    return [u for u in dict.fromkeys(units) if u not in done]
+
+
+def _publish(
+    pending: Sequence[str],
+    out_dir: str,
+    manifest: Manifest,
+    put: Callable[[str, str], None],
+    fail_after: int | None,
+) -> list[str]:
+    """Publish each pending unit in order: ``put(u, path)`` fills a freshly
+    cleared ``out_dir/unit=<u>/``, then the unit's marker is written. Returns
+    the units published. ``fail_after`` injects a crash once N units are
+    published (tests).
+
+    A crash between ``put`` and the marker leaves a unit directory without a
+    marker: it is still pending, so the next run clears and refills it."""
+    written = []
+    for u in pending:
+        if fail_after is not None and len(written) >= fail_after:
+            raise RuntimeError(f"injected failure after {fail_after} units")
+        path = os.path.join(out_dir, f"unit={u}")
+        shutil.rmtree(path, ignore_errors=True)
+        put(u, path)
+        manifest.mark_done(u, {"path": path})
+        written.append(u)
+    return written
+
+
 def resumable_write(
     df_for_unit: Callable[[str], DataFrame],
     units: Sequence[str],
@@ -70,27 +104,32 @@ def resumable_write(
     exists; mark done after a successful write. Returns the units written this
     run. ``fail_after`` injects a crash after N writes (tests).
 
-    Idempotency: mode=overwrite per unit directory — a unit that crashed
-    mid-write is rewritten whole on resume; completed units are never
-    touched (their files keep their mtimes)."""
-    done = manifest.done_units()
-    written = []
-    for u in units:
-        if u in done:
-            continue
-        if fail_after is not None and len(written) >= fail_after:
-            raise RuntimeError(f"injected failure after {fail_after} units")
-        path = os.path.join(out_dir, f"unit={u}")
-        df_for_unit(u).write.mode("overwrite").parquet(path)
-        manifest.mark_done(u, {"path": path})
-        written.append(u)
-    return written
+    Idempotency: a unit that crashed mid-write is rewritten whole on resume;
+    completed units are never touched (their files keep their mtimes)."""
+    return _publish(
+        _pending(units, manifest),
+        out_dir,
+        manifest,
+        lambda u, path: df_for_unit(u).write.parquet(path),
+        fail_after,
+    )
 
 
 def read_all_units(spark: SparkSession, out_dir: str) -> DataFrame:
     """Read the union of all unit directories (basePath keeps the unit
     partition column out of the data)."""
     return spark.read.option("basePath", out_dir).parquet(f"{out_dir}/unit=*")
+
+
+def _check_unit_names(spark: SparkSession, units: Sequence[str]) -> None:
+    """Every unit must name one directory as is: Spark's partitioned write
+    escapes the characters ``ExternalCatalogUtils.escapePathName`` escapes
+    (``/``, ``=``, ``%``, ``:``, control characters, ...) and files an empty
+    value under ``__HIVE_DEFAULT_PARTITION__``."""
+    escape = spark._jvm.org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.escapePathName
+    bad = [u for u in units if not u or escape(u) != u]
+    if bad:
+        raise ValueError(f"sink names cannot map to a unit directory: {bad}")
 
 
 def resumable_sink_write(
@@ -101,13 +140,35 @@ def resumable_sink_write(
     sink_col: str = "sink",
     fail_after: int | None = None,
 ) -> list[str]:
-    """The flagship use: per-sink resumable fan-out write. The routed frame is
-    filtered per sink (disjoint writes); localCheckpoint/cache upstream of the
-    router avoids recomputing the parse stage per sink when the plan is hot."""
-    return resumable_write(
-        lambda s: routed.filter(routed[sink_col] == s).drop(sink_col),
-        sinks,
-        out_dir,
-        manifest,
-        fail_after=fail_after,
-    )
+    """The flagship use: per-sink resumable fan-out write that runs the
+    upstream once. Every pending sink's rows are staged by ONE write of
+    ``routed`` partitioned by ``sink_col`` into ``out_dir/_staging``; each
+    pending unit is then published in ``sinks`` order by renaming its staged
+    directory onto ``out_dir/unit=<sink>/`` and writing its marker. A pending
+    sink with no routed rows gets a schema-only unit (an always-false filter,
+    which Catalyst folds to an empty relation, so no upstream runs). Returns
+    the sinks published this run; none pending means no Spark job at all.
+
+    Crash states: a crash during the staging job publishes nothing (the next
+    run deletes the stale ``_staging`` and stages again); a crash mid-publish
+    leaves at most one unit directory without a marker, which the next run
+    replaces. Completed units are never touched."""
+    _check_unit_names(routed.sparkSession, sinks)
+    pending = _pending(sinks, manifest)
+    if not pending:
+        return []
+    staging = os.path.join(out_dir, "_staging")
+    shutil.rmtree(staging, ignore_errors=True)
+    routed.filter(F.col(sink_col).isin(pending)).write.partitionBy(sink_col).parquet(staging)
+    empty = routed.filter(F.lit(False)).drop(sink_col)
+
+    def put(u: str, path: str) -> None:
+        staged = os.path.join(staging, f"{sink_col}={u}")
+        if os.path.isdir(staged):
+            os.replace(staged, path)
+        else:
+            empty.write.parquet(path)
+
+    written = _publish(pending, out_dir, manifest, put, fail_after)
+    shutil.rmtree(staging)
+    return written

@@ -185,3 +185,73 @@ def test_scaling_bench_terminates_probe_pools_on_error(monkeypatch):
     with pytest.raises(RuntimeError, match="spark failed"):
         bench._scaling_bench("unused", cpus=8, n_rows=1)
     assert len(pools) == 2 and all(p.terminated for p in pools)
+
+
+def test_scaling_bench_keeps_passes_when_worker_restart_fails(monkeypatch, tmp_path):
+    """A fresh-JVM restart that fails must not discard the scaling section:
+    the degraded level keeps its earlier result, the failure is recorded in
+    that level's retry entry, and no further pass runs on the dead level."""
+    import io
+    import json
+    import multiprocessing
+    import subprocess
+
+    from loongcollector_spark import session
+
+    class FakePool:
+        def __init__(self, n):
+            pass
+
+        def map(self, fn, args):
+            return [0.0] * len(args)
+
+        def terminate(self):
+            pass
+
+    class FakeSpark:
+        sparkContext = type("SC", (), {"setLogLevel": lambda self, level: None})()
+
+        def stop(self):
+            pass
+
+    class FakeWorker:
+        """A READY worker whose every run reports the same wall and CPU."""
+
+        def __init__(self, wall, cpu):
+            run = json.dumps({"wall": wall, "cpu": cpu, "ext_cpu": 0.0, "steal_cpu": 0.0})
+            self.stdout = io.StringIO("READY\n" + f"{run}\n" * 10)
+            self.stdin = io.StringIO()
+
+        def poll(self):
+            return 0
+
+        def wait(self, timeout=None):
+            return 0
+
+    # cpus=8 runs levels 2 and 8; level 8 burns 3x level 2's CPU-seconds, so
+    # it fails the CPU gate through both in-place re-runs and gets restarted
+    started = []
+
+    def fake_popen(cmd, **kw):
+        n = int(cmd[cmd.index("--cpus") + 1])
+        if n in started:
+            raise OSError("fresh worker failed to start")
+        started.append(n)
+        return FakeWorker(*{2: (4.0, 10.0), 8: (1.2, 30.0)}[n])
+
+    monkeypatch.setattr(multiprocessing, "Pool", FakePool)
+    monkeypatch.setattr(session, "get_spark", lambda *a, **k: FakeSpark())
+    monkeypatch.setattr(subprocess, "Popen", fake_popen)
+    monkeypatch.setattr(bench, "CACHE_ROOT", str(tmp_path))
+    monkeypatch.setattr(bench, "ensure_sequences_cache", lambda *a: str(tmp_path))
+    monkeypatch.setattr(bench, "_budget_left", lambda: 1e6)
+    monkeypatch.setattr(bench, "_ext_busy_cores", lambda *a: 0.0)
+    monkeypatch.setenv("SPARK_GRAFT_SCALE_PASSES", "3")
+
+    out = bench._scaling_bench("unused", cpus=8, n_rows=1)
+    assert "error" not in out
+    assert (out["sec_low"], out["sec_high"]) == (4.0, 1.2)
+    assert len(out["passes"]) == 1  # the dead level stops later passes
+    retry = out["passes"][0]["retry_8c"]
+    assert len(retry) == 3 and retry[-1]["restarted_jvm"]
+    assert retry[-1]["restart_error"] == "OSError: fresh worker failed to start"

@@ -120,6 +120,86 @@ def test_resumable_sink_write(spark, tmp_path):
     assert sorted(r["id"] for r in a.collect()) == [1, 2]
 
 
+def _sink_frame(spark, n=30):
+    """(id, sink) rows spread over sinks s0, s1, s2."""
+    return spark.range(n).withColumn("sink", F.format_string("s%d", F.col("id") % 3))
+
+
+def _parquet_mtimes(path):
+    names = [f for f in os.listdir(path) if f.endswith(".parquet")]
+    return {f: os.path.getmtime(os.path.join(path, f)) for f in names}
+
+
+def test_sink_write_clears_stale_staging(spark, tmp_path):
+    """A ``_staging`` left by a crashed run is deleted, and its rows reach no
+    unit, not even the unit of the sink it was staged for; a unit directory
+    published without its marker is replaced."""
+    out_dir = str(tmp_path / "o")
+    spark.createDataFrame([(99,)], ["id"]).write.parquet(f"{out_dir}/_staging/sink=x")
+    spark.createDataFrame([(98,)], ["id"]).write.parquet(f"{out_dir}/unit=s1")
+    routed = _sink_frame(spark)
+    sinks = ["s0", "s1", "s2", "x"]
+    assert resumable_sink_write(routed, sinks, out_dir, Manifest(str(tmp_path / "m"))) == sinks
+    assert not os.path.exists(f"{out_dir}/_staging")
+    ids = sorted(r["id"] for r in read_all_units(spark, out_dir).collect())
+    assert ids == list(range(30))
+
+
+def test_resumable_sink_write_resumes_after_crash(spark, tmp_path):
+    out_dir = str(tmp_path / "o")
+    manifest = Manifest(str(tmp_path / "m"))
+    routed = _sink_frame(spark)
+    sinks = ["s0", "s1", "s2"]
+    with pytest.raises(RuntimeError, match="injected failure"):
+        resumable_sink_write(routed, sinks, out_dir, manifest, fail_after=1)
+    assert manifest.done_units() == {"s0"}
+    mtimes = _parquet_mtimes(f"{out_dir}/unit=s0")
+    assert mtimes
+
+    assert resumable_sink_write(routed, sinks, out_dir, manifest) == ["s1", "s2"]
+    assert manifest.done_units() == set(sinks)
+    assert _parquet_mtimes(f"{out_dir}/unit=s0") == mtimes
+    assert not os.path.exists(f"{out_dir}/_staging")
+    back = read_all_units(spark, out_dir)
+    assert sorted((r["unit"], r["id"]) for r in back.collect()) == sorted(
+        (f"s{i % 3}", i) for i in range(30)
+    )
+
+
+def test_sink_write_empty_sink_gets_readable_unit(spark, tmp_path):
+    out_dir = str(tmp_path / "o")
+    manifest = Manifest(str(tmp_path / "m"))
+    routed = _sink_frame(spark)
+    assert resumable_sink_write(routed, ["s0", "none"], out_dir, manifest) == ["s0", "none"]
+    assert manifest.done_units() == {"s0", "none"}
+    empty = spark.read.parquet(f"{out_dir}/unit=none")
+    assert empty.columns == ["id"] and empty.count() == 0
+
+
+def test_sink_write_starts_no_job_when_all_done(spark, tmp_path):
+    out_dir = str(tmp_path / "o")
+    manifest = Manifest(str(tmp_path / "m"))
+    routed = _sink_frame(spark)
+    resumable_sink_write(routed, ["s0", "s1"], out_dir, manifest)
+    sc = spark.sparkContext
+    sc.setJobGroup("sink-write-all-done", "sink-write-all-done")
+    try:
+        assert resumable_sink_write(routed, ["s0", "s1"], out_dir, manifest) == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup("sink-write-all-done")) == []
+
+
+@pytest.mark.parametrize("bad", ["a/b", "a=b"])
+def test_sink_write_rejects_unmappable_sink_name(spark, tmp_path, bad):
+    """Spark would escape the name in the staged directory, so it is refused
+    before any job runs."""
+    out_dir, manifest = tmp_path / "o", Manifest(str(tmp_path / "m"))
+    with pytest.raises(ValueError, match=bad):
+        resumable_sink_write(_sink_frame(spark), ["s0", bad], str(out_dir), manifest)
+    assert not out_dir.exists()
+
+
 # --- metrics -----------------------------------------------------------------
 
 

@@ -114,6 +114,24 @@ def test_flagship_sink_write_resume_after_crash(spark, sf_dir, tmp_path):
     assert total == 1900
 
 
+def test_sink_write_runs_upstream_once(spark, sf_dir, tmp_path):
+    """The three-sink write evaluates everything upstream of the router once:
+    an identity pass over the sequences counts each input row exactly once."""
+    seq = sequences_df(spark, sf_dir)
+    seen = spark.sparkContext.accumulator(0)
+
+    def count_rows(batches):
+        for batch in batches:
+            seen.add(len(batch))
+            yield batch
+
+    routed = flagship.routed_from(spark, seq.mapInPandas(count_rows, seq.schema))
+    sinks = ["sink_a", "sink_b", "sink_default"]
+    out = str(tmp_path / "sinks")
+    assert resumable_sink_write(routed, sinks, out, Manifest(str(tmp_path / "m"))) == sinks
+    assert seen.value == seq.count()
+
+
 def test_salting_spreads_hot_source(spark, sf_dir):
     from loongcollector_spark.aggregate import partition_for_sinks
 

@@ -9,10 +9,12 @@ Usage (local sandbox — swap --master for yarn/k8s on a real cluster):
         tools/submit_job.py \
         --sf-dir /root/testdata/sf0.001 --out /tmp/lc_out
 
-The job: read the pre-tokenized sequences → parse→enrich→route → resumable
-per-sink parquet writes (checkpoint manifest under <out>/_manifest) → print
-per-sink aggregates as one JSON line. Re-running with the same --out resumes:
-completed sinks are skipped.
+The job: read the pre-tokenized sequences → parse→enrich→route → one parquet
+write partitioned by sink (staged under <out>/_staging, then each sink is
+published to <out>/unit=<sink> with a marker in the checkpoint manifest under
+<out>/_manifest) → print per-sink aggregates as one JSON line. Re-running with
+the same --out resumes: completed sinks are skipped, and when every sink is
+done no write job runs.
 """
 
 from __future__ import annotations
