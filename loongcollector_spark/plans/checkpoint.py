@@ -21,7 +21,6 @@ from __future__ import annotations
 
 import json
 import os
-import shutil
 import time
 from dataclasses import dataclass
 from typing import Callable, Sequence
@@ -74,19 +73,19 @@ def _publish(
     put: Callable[[str, str], None],
     fail_after: int | None,
 ) -> list[str]:
-    """Publish each pending unit in order: ``put(u, path)`` fills a freshly
-    cleared ``out_dir/unit=<u>/``, then the unit's marker is written. Returns
-    the units published. ``fail_after`` injects a crash once N units are
-    published (tests).
+    """Publish each pending unit in order: ``put(u, path)`` leaves exactly
+    ``u``'s rows in ``out_dir/unit=<u>/``, replacing whatever a crashed run
+    left there, then the unit's marker is written. Returns the units
+    published. ``fail_after`` injects a crash once N units are published
+    (tests).
 
     A crash between ``put`` and the marker leaves a unit directory without a
-    marker: it is still pending, so the next run clears and refills it."""
+    marker: it is still pending, so the next run replaces it."""
     written = []
     for u in pending:
         if fail_after is not None and len(written) >= fail_after:
             raise RuntimeError(f"injected failure after {fail_after} units")
         path = os.path.join(out_dir, f"unit={u}")
-        shutil.rmtree(path, ignore_errors=True)
         put(u, path)
         manifest.mark_done(u, {"path": path})
         written.append(u)
@@ -104,13 +103,14 @@ def resumable_write(
     exists; mark done after a successful write. Returns the units written this
     run. ``fail_after`` injects a crash after N writes (tests).
 
-    Idempotency: a unit that crashed mid-write is rewritten whole on resume;
-    completed units are never touched (their files keep their mtimes)."""
+    Idempotency: mode=overwrite per unit directory — a unit that crashed
+    mid-write is rewritten whole on resume; completed units are never
+    touched (their files keep their mtimes)."""
     return _publish(
         _pending(units, manifest),
         out_dir,
         manifest,
-        lambda u, path: df_for_unit(u).write.parquet(path),
+        lambda u, path: df_for_unit(u).write.mode("overwrite").parquet(path),
         fail_after,
     )
 
@@ -141,34 +141,48 @@ def resumable_sink_write(
     fail_after: int | None = None,
 ) -> list[str]:
     """The flagship use: per-sink resumable fan-out write that runs the
-    upstream once. Every pending sink's rows are staged by ONE write of
-    ``routed`` partitioned by ``sink_col`` into ``out_dir/_staging``; each
-    pending unit is then published in ``sinks`` order by renaming its staged
-    directory onto ``out_dir/unit=<sink>/`` and writing its marker. A pending
-    sink with no routed rows gets a schema-only unit (an always-false filter,
-    which Catalyst folds to an empty relation, so no upstream runs). Returns
+    upstream once. ONE write of ``routed``, filtered to the pending sinks and
+    partitioned by ``sink_col`` renamed to ``unit``, fills every pending
+    ``out_dir/unit=<sink>/`` with Spark's dynamic partition overwrite (the
+    job stages its files in a hidden ``.spark-staging-*`` directory and swaps
+    in only the partitions it wrote, so completed units keep their files).
+    Each pending sink is then marked done in ``sinks`` order; one with no
+    routed rows first gets a schema-only unit from an always-false filter,
+    which Catalyst folds to an empty relation, so no upstream runs. Returns
     the sinks published this run; none pending means no Spark job at all.
+    Directories are handled through the Hadoop FileSystem of ``out_dir``, so
+    local paths, ``file://`` URIs and a cluster's default FS behave alike.
 
-    Crash states: a crash during the staging job publishes nothing (the next
-    run deletes the stale ``_staging`` and stages again); a crash mid-publish
-    leaves at most one unit directory without a marker, which the next run
-    replaces. Completed units are never touched."""
-    _check_unit_names(routed.sparkSession, sinks)
+    Crash states: a crash during the write job publishes nothing (the next
+    run deletes its leftover staging directory); a crash after the job
+    leaves units without a marker, which the next run clears and rewrites.
+    Completed units are never touched."""
+    spark = routed.sparkSession
+    _check_unit_names(spark, sinks)
     pending = _pending(sinks, manifest)
     if not pending:
         return []
-    staging = os.path.join(out_dir, "_staging")
-    shutil.rmtree(staging, ignore_errors=True)
-    routed.filter(F.col(sink_col).isin(pending)).write.partitionBy(sink_col).parquet(staging)
+    Path = spark._jvm.org.apache.hadoop.fs.Path
+    root = Path(out_dir)
+    fs = root.getFileSystem(spark._jsc.hadoopConfiguration())
+    # Clear what a crashed run left: its staging directories and the pending
+    # units, so that after the write a unit exists iff the sink had rows.
+    for st in fs.globStatus(Path(root, ".spark-staging-*")) or []:
+        fs.delete(st.getPath(), True)
+    for u in pending:
+        fs.delete(Path(root, f"unit={u}"), True)
+    (
+        routed.filter(F.col(sink_col).isin(pending))
+        .withColumnRenamed(sink_col, "unit")
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("unit")
+        .parquet(out_dir)
+    )
     empty = routed.filter(F.lit(False)).drop(sink_col)
 
     def put(u: str, path: str) -> None:
-        staged = os.path.join(staging, f"{sink_col}={u}")
-        if os.path.isdir(staged):
-            os.replace(staged, path)
-        else:
+        if not fs.exists(Path(root, f"unit={u}")):
             empty.write.parquet(path)
 
-    written = _publish(pending, out_dir, manifest, put, fail_after)
-    shutil.rmtree(staging)
-    return written
+    return _publish(pending, out_dir, manifest, put, fail_after)

@@ -130,19 +130,25 @@ def _parquet_mtimes(path):
     return {f: os.path.getmtime(os.path.join(path, f)) for f in names}
 
 
-def test_sink_write_clears_stale_staging(spark, tmp_path):
-    """A ``_staging`` left by a crashed run is deleted, and its rows reach no
-    unit, not even the unit of the sink it was staged for; a unit directory
-    published without its marker is replaced."""
+def _staging_dirs(out_dir):
+    return [f for f in os.listdir(out_dir) if f.startswith(".spark-staging")]
+
+
+def test_sink_write_clears_crash_leftovers(spark, tmp_path):
+    """What a crashed run left is cleared and reaches no unit: a staging
+    directory of its write job, a unit published without its marker, and a
+    marker-less unit of a sink that has no rows this run."""
     out_dir = str(tmp_path / "o")
-    spark.createDataFrame([(99,)], ["id"]).write.parquet(f"{out_dir}/_staging/sink=x")
+    spark.createDataFrame([(99,)], ["id"]).write.parquet(f"{out_dir}/.spark-staging-0/unit=s0")
     spark.createDataFrame([(98,)], ["id"]).write.parquet(f"{out_dir}/unit=s1")
+    spark.createDataFrame([(97,)], ["id"]).write.parquet(f"{out_dir}/unit=x")
     routed = _sink_frame(spark)
     sinks = ["s0", "s1", "s2", "x"]
     assert resumable_sink_write(routed, sinks, out_dir, Manifest(str(tmp_path / "m"))) == sinks
-    assert not os.path.exists(f"{out_dir}/_staging")
+    assert _staging_dirs(out_dir) == []
     ids = sorted(r["id"] for r in read_all_units(spark, out_dir).collect())
     assert ids == list(range(30))
+    assert spark.read.parquet(f"{out_dir}/unit=x").count() == 0
 
 
 def test_resumable_sink_write_resumes_after_crash(spark, tmp_path):
@@ -159,11 +165,28 @@ def test_resumable_sink_write_resumes_after_crash(spark, tmp_path):
     assert resumable_sink_write(routed, sinks, out_dir, manifest) == ["s1", "s2"]
     assert manifest.done_units() == set(sinks)
     assert _parquet_mtimes(f"{out_dir}/unit=s0") == mtimes
-    assert not os.path.exists(f"{out_dir}/_staging")
+    assert _staging_dirs(out_dir) == []
     back = read_all_units(spark, out_dir)
     assert sorted((r["unit"], r["id"]) for r in back.collect()) == sorted(
         (f"s{i % 3}", i) for i in range(30)
     )
+
+
+def test_sink_write_to_file_uri(spark, tmp_path):
+    """A ``file://`` out_dir is written, resumed and read back like a plain
+    path: every directory step goes through the Hadoop FileSystem."""
+    out_dir = (tmp_path / "o").as_uri()
+    manifest = Manifest(str(tmp_path / "m"))
+    routed = _sink_frame(spark)
+    sinks = ["s0", "s1", "s2", "none"]
+    with pytest.raises(RuntimeError, match="injected failure"):
+        resumable_sink_write(routed, sinks, out_dir, manifest, fail_after=1)
+    assert resumable_sink_write(routed, sinks, out_dir, manifest) == sinks[1:]
+    back = read_all_units(spark, out_dir)
+    assert sorted((r["unit"], r["id"]) for r in back.collect()) == sorted(
+        (f"s{i % 3}", i) for i in range(30)
+    )
+    assert spark.read.parquet(f"{out_dir}/unit=none").count() == 0
 
 
 def test_sink_write_empty_sink_gets_readable_unit(spark, tmp_path):
@@ -192,7 +215,7 @@ def test_sink_write_starts_no_job_when_all_done(spark, tmp_path):
 
 @pytest.mark.parametrize("bad", ["a/b", "a=b"])
 def test_sink_write_rejects_unmappable_sink_name(spark, tmp_path, bad):
-    """Spark would escape the name in the staged directory, so it is refused
+    """Spark would escape the name in the unit directory, so it is refused
     before any job runs."""
     out_dir, manifest = tmp_path / "o", Manifest(str(tmp_path / "m"))
     with pytest.raises(ValueError, match=bad):

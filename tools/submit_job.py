@@ -10,11 +10,11 @@ Usage (local sandbox — swap --master for yarn/k8s on a real cluster):
         --sf-dir /root/testdata/sf0.001 --out /tmp/lc_out
 
 The job: read the pre-tokenized sequences → parse→enrich→route → one parquet
-write partitioned by sink (staged under <out>/_staging, then each sink is
-published to <out>/unit=<sink> with a marker in the checkpoint manifest under
-<out>/_manifest) → print per-sink aggregates as one JSON line. Re-running with
-the same --out resumes: completed sinks are skipped, and when every sink is
-done no write job runs.
+write partitioned by sink into <out>/unit=<sink> (dynamic partition
+overwrite, so finished sinks are left alone), each sink then marked done in
+the checkpoint manifest under <out>/_manifest → print per-sink aggregates as
+one JSON line. Re-running with the same --out resumes: completed sinks are
+skipped, and when every sink is done no write job runs.
 """
 
 from __future__ import annotations
