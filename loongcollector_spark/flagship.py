@@ -18,11 +18,14 @@ the lookup join is broadcast (no shuffle).
 
 from __future__ import annotations
 
+import functools
+
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession
+from pyspark import SparkContext
+from pyspark.sql import Column, DataFrame, SparkSession
 
 from .aggregate import partition_for_sinks, sink_aggregates, with_lineage
-from .operators.base import to_events
+from .operators.base import FIELDS, to_events
 from .operators.common import ParserOptions
 from .operators.enrich import BroadcastLookup
 from .operators.parse import DelimiterParser, JsonParser, RegexParser
@@ -73,13 +76,12 @@ def replicated_sequences(spark: SparkSession, sf_dir: str, factor: int) -> DataF
     )
 
 
-def parsed_events_from(seq: DataFrame) -> DataFrame:
-    """Parse a sequences frame into the unified event frame (doc_id, source,
-    n_tok, fields): ONE Arrow decode stage over all sources, then ONE
-    projection that dispatches on ``source`` to each parser's
-    ``extract`` pair. A row whose source has no parser fails the parse and is
-    discarded."""
-    ev = to_events(decode_tokens_arrow(seq, "tokens", "content", drop_tokens=True))
+@functools.lru_cache(maxsize=1)
+def _parse_columns(gateway) -> tuple[Column | None, Column]:
+    """The parse projection as ``ParserOptions.columns``: one flat CASE on
+    ``source`` over each parser's ``extract`` pair. Building it costs ~1,500
+    py4j round trips, and it depends on no DataFrame, so it is built once per
+    JVM ``gateway`` and shared by every plan."""
     src = F.element_at(F.col("fields"), F.lit("content"))
     # one flat CASE per output: F.when starts it, Column.when extends it
     success = new_map = F
@@ -87,7 +89,18 @@ def parsed_events_from(seq: DataFrame) -> DataFrame:
         ok, m = parser.extract(src)
         hit = F.col("source") == source
         success, new_map = success.when(hit, ok), new_map.when(hit, m)
-    return ParserOptions().finalize(ev, success.otherwise(F.lit(False)), new_map, src)
+    return ParserOptions().columns(success.otherwise(F.lit(False)), new_map, src)
+
+
+def parsed_events_from(seq: DataFrame) -> DataFrame:
+    """Parse a sequences frame into the unified event frame (doc_id, source,
+    n_tok, fields): ONE Arrow decode stage over all sources, then ONE
+    projection that dispatches on ``source`` to each parser's
+    ``extract`` pair. A row whose source has no parser fails the parse and is
+    discarded."""
+    ev = to_events(decode_tokens_arrow(seq, "tokens", "content", drop_tokens=True))
+    keep, fields = _parse_columns(SparkContext._gateway)
+    return ev.filter(keep).withColumn(FIELDS, fields)
 
 
 # Alias kept because the benchmark's traced run times both names

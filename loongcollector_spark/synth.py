@@ -120,7 +120,6 @@ SOURCE_LOOKUP_ROWS = [
     ("csvlog", "team-c", "prod", "rk-2"),
     ("apsara", "team-d", "prod", "rk-3"),  # unused source → exercises left-join miss
 ]
-SOURCE_LOOKUP_COLS = ["source", "team_tag", "env", "route_key"]
 
 # Router conditions (reference core/collection_pipeline/route/Condition.cpp:66-111
 # tag-equality; unconditioned flusher always matches, Router.cpp:34).
@@ -132,7 +131,11 @@ ROUTE_RULES = [
 
 
 def source_lookup_df(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(SOURCE_LOOKUP_ROWS, SOURCE_LOOKUP_COLS)
+    """The lookup as an inline table: a local relation that the broadcast
+    reads on the driver. ``createDataFrame`` of a Python list would be an
+    RDD, which costs a Spark job with Python workers every time a plan
+    broadcasts it."""
+    return spark.sql(f"SELECT * FROM {source_lookup_values_sql()}")
 
 
 def source_lookup_values_sql() -> str:

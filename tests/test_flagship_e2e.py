@@ -132,6 +132,27 @@ def test_sink_write_runs_upstream_once(spark, sf_dir, tmp_path):
     assert seen.value == seq.count()
 
 
+def test_parse_columns_built_once_per_jvm(spark, sf_dir):
+    """Building a plan reuses the parse projection built for the first one."""
+    seq = sequences_df(spark, sf_dir)
+    flagship.parsed_events_from(seq)
+    before = flagship._parse_columns.cache_info()
+    flagship.parsed_events_from(seq)
+    after = flagship._parse_columns.cache_info()
+    assert (after.hits, after.misses) == (before.hits + 1, before.misses)
+
+
+def test_source_lookup_is_local_relation(spark):
+    """The broadcast lookup is read on the driver: no RDD, so no Spark job
+    with Python workers per plan."""
+    from loongcollector_spark.synth import SOURCE_LOOKUP_ROWS, source_lookup_df
+
+    df = source_lookup_df(spark)
+    assert "LocalTableScan" in df._jdf.queryExecution().executedPlan().toString()
+    assert df.columns == ["source", "team_tag", "env", "route_key"]
+    assert sorted(tuple(r) for r in df.collect()) == sorted(SOURCE_LOOKUP_ROWS)
+
+
 def test_salting_spreads_hot_source(spark, sf_dir):
     from loongcollector_spark.aggregate import partition_for_sinks
 
